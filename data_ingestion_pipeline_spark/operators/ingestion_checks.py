@@ -217,11 +217,11 @@ SELECT event_id, ts, user_id, event_type, value FROM dedup
 
 def merge_upsert_keyed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME U1-U3 merge scenario as ``merge_upsert_events``, committed
-    through the keyed-partial-rewrite path (plans/merge.py
-    ``repartition_keys=True``): the bootstrap merge lays the table out in
-    16 key-hash bucket directories, and the batch merge partition-prunes
-    its stored scan to the touched buckets and hard-links the rest into
-    the new version. Registering it against the IDENTICAL oracle pins the
+    through the keyed-partial-rewrite path: the stored rows are committed
+    once in 16 key-hash bucket directories (``overwrite_bucketed``), and
+    the plain batch merge, following that layout, partition-prunes its
+    stored scan to the touched buckets and hard-links the rest into the
+    new version. Registering it against the IDENTICAL oracle pins the
     load-bearing invariant under the driver's value hash: the physical
     layout (CoW full rewrite vs keyed partial rewrite) must be observably
     invisible — same rows, same last-wins resolution, same schema (no
@@ -249,9 +249,8 @@ def merge_upsert_keyed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _scratch(sf_dir, "merge_keyed_demo")
     shutil.rmtree(root, ignore_errors=True)
     table = ManagedTable(spark, root)
-    kw = dict(keys=["event_id"], order_col="ts", repartition_keys=True, n_buckets=16)
-    merge_upsert(table, stored, **kw)  # bootstrap commits bucketed
-    merge_upsert(table, batch, **kw)  # partial: pruned scan + hard links
+    table.overwrite_bucketed(stored, ["event_id"], 16)  # declares the layout
+    merge_upsert(table, batch, keys=["event_id"], order_col="ts")  # partial
     return table.read()
 
 

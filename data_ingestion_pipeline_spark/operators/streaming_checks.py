@@ -780,10 +780,11 @@ def streaming_ingest_merge_keyed_events(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """``streaming_ingest_merge_events`` through the keyed-partial-rewrite
-    sink (plans/merge.py ``repartition_keys=True``): the insert batch
-    bootstraps a 16-bucket key-partitioned table, the update micro-batch
-    commits a partial rewrite (pruned stored scan, untouched buckets
-    hard-linked). Registered against the IDENTICAL oracle — the
+    sink: the table is declared empty in a 16-bucket key-partitioned
+    layout before the stream starts (``overwrite_bucketed``), so both the
+    insert and the update micro-batch merge with plain ``merge_upsert``
+    calls that commit partial rewrites (pruned stored scan, untouched
+    buckets hard-linked). Registered against the IDENTICAL oracle — the
     layout-invariance pin of ``merge_upsert_keyed_events`` extended to
     the actual streaming foreachBatch path (checkpointed epochs, forced
     file order)."""
@@ -809,6 +810,7 @@ def streaming_ingest_merge_keyed_events(
             T.StructField("value", T.DoubleType(), True),
         ]
     )
+    table.overwrite_bucketed(spark.createDataFrame([], schema), ["event_id"], 16)
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "*.parquet")
@@ -817,14 +819,7 @@ def streaming_ingest_merge_keyed_events(
     )
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_upsert(
-            table,
-            batch_df,
-            keys=["event_id"],
-            order_col="ts",
-            repartition_keys=True,
-            n_buckets=16,
-        )
+        merge_upsert(table, batch_df, keys=["event_id"], order_col="ts")
 
     with _stream_state_partitions(spark):
         query = (

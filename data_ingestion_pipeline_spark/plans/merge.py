@@ -25,9 +25,10 @@ merging it once (tested in tests/test_merge.py).
 
 Scale: the batch dedup shuffles only the batch (micro-batch sized); the
 anti-join shuffles store+batch on the key — at 100 TB you bound this by
-partitioning the store on the key (pass ``repartition_keys=True``) so only
-key-matching partitions rewrite; with a Delta/Iceberg backend the same plan
-becomes ``MERGE INTO`` with file-level pruning.
+laying the store out in key buckets once (``ManagedTable.overwrite_bucketed``)
+so that each merge rewrites only the buckets its batch touches; the table's
+layout, not a per-call option, selects that path. With a Delta/Iceberg
+backend the same plan becomes ``MERGE INTO`` with file-level pruning.
 """
 
 from __future__ import annotations
@@ -82,9 +83,6 @@ def merge_upsert(
     keys: Sequence[str],
     order_col: str,
     evolve_schema: bool = False,
-    repartition_keys: bool = False,
-    n_buckets: int = 64,
-    bucket_sql: str | None = None,
 ) -> str:
     """Upsert ``batch`` into ``table`` by ``keys`` with last-wins semantics.
 
@@ -98,29 +96,19 @@ def merge_upsert(
     table. Off by default: an unexpected column drifting in silently is
     usually a bug, so widening is opt-in per pipeline.
 
-    ``repartition_keys=True`` is the scale lever the sustained-streaming
-    bench motivates: the table is laid out in ``n_buckets`` key-hash
-    partition directories, the stored scan partition-prunes to the buckets
-    the batch touches, and untouched buckets are hard-linked into the new
-    version instead of rewritten — per-merge cost becomes O(touched
-    buckets), independent of table size (BASELINE.md §streaming). Falls
-    back to one full (re-bucketing) rewrite when the table is not yet in
-    the declared layout, and to the plain path when equality-delete
-    sidecars are pending or the schema is evolving (deletes are global key
-    predicates — folding them per-bucket while hard-linking other buckets
-    would fork the fold state; evolution changes untouched rows' schema).
-
-    ``bucket_sql`` overrides the default hash bucketing with a caller
-    expression that matches the ingest's key LOCALITY (see
-    ManagedTable.default_bucket_sql) — with uniform hash bucketing a large
-    random-key batch touches every bucket and the partial path degenerates
-    to a full rewrite plus link overhead; with a locality-preserving
-    expression a micro-batch touches O(1) buckets at any table size.
+    The table's layout picks how many bytes move. When the base version
+    is key-bucketed on exactly ``keys`` (declared once with
+    ``ManagedTable.overwrite_bucketed``), no equality-delete sidecars are
+    pending and the schema is not evolving, the merge is a keyed PARTIAL
+    rewrite: the stored scan partition-prunes to the buckets the batch
+    touches and untouched buckets are hard-linked into the new version,
+    so per-merge cost is O(touched buckets), independent of table size
+    (BASELINE.md §streaming). Otherwise it is one full rewrite in the
+    base's layout (deletes are global key predicates — folding them
+    per-bucket while hard-linking other buckets would fork the fold
+    state; evolution changes untouched rows' schema). Both paths have
+    the same last-wins, idempotency and OCC semantics.
     """
-    if repartition_keys:
-        return _merge_upsert_partial(
-            table, batch, keys, order_col, evolve_schema, n_buckets, bucket_sql
-        )
     deduped = dedupe_last_wins(batch, keys, order_col)
     # read-modify-write: declare the base version so a concurrent commit
     # between our read and our swap aborts (ConcurrentWriteError) instead
@@ -128,10 +116,11 @@ def merge_upsert(
     base = table.current_version()
     if base is None:
         return table.overwrite(deduped, expected_base=None)
-    # deduped feeds BOTH the anti-join (kept) and the union below; without a
-    # pin the commit plan scans + window-dedups the batch source TWICE per
-    # merge (tools/stream_bench.py caught numInputRows at exactly 2x the
-    # file rows per micro-batch). The batch is micro-batch/ingest sized —
+    # deduped feeds BOTH the anti-join (kept) and the union below (and the
+    # touched-bucket collect of a partial rewrite); without a pin the
+    # commit plan scans + window-dedups the batch source TWICE per merge
+    # (tools/stream_bench.py caught numInputRows at exactly 2x the file
+    # rows per micro-batch). The batch is micro-batch/ingest sized —
     # bounded — so one lazy localCheckpoint halves the source work (both
     # consumers share the RDD inside the one commit action, so it
     # computes once; lazy skips the extra eager job); blocks are
@@ -141,77 +130,28 @@ def merge_upsert(
     # read: a concurrent equality delete then aborts this merge instead of
     # being silently folded away by a stale snapshot
     sidecars = table.sidecar_listing(base)
-    stored = table.read(version=base)
-    kept = stored.join(deduped.select(*keys), list(keys), "left_anti")
-    if evolve_schema:
-        merged = kept.unionByName(deduped, allowMissingColumns=True)
+    spec = table.bucket_spec(base)
+    partial = (
+        spec is not None
+        and spec[0] == list(keys)
+        and not sidecars
+        and not evolve_schema
+    )
+    if partial:
+        # bounded collect: at most n_buckets ids (micro-batches touch far
+        # fewer)
+        touched = sorted(
+            r[0] for r in deduped.select(F.expr(spec[2])).distinct().collect()
+        )
+        stored = table.read_buckets(base, touched)
     else:
-        merged = kept.unionByName(deduped)
+        stored = table.read(version=base)
+    kept = stored.join(deduped.select(*keys), list(keys), "left_anti")
+    merged = kept.unionByName(deduped, allowMissingColumns=evolve_schema)
+    if partial:
+        return table.replace_buckets(
+            merged, touched, expected_base=base, expected_sidecars=sidecars
+        )
     return table.overwrite(
         merged, expected_base=base, expected_sidecars=sidecars
-    )
-
-
-def _merge_upsert_partial(
-    table: ManagedTable,
-    batch: DataFrame,
-    keys: Sequence[str],
-    order_col: str,
-    evolve_schema: bool,
-    n_buckets: int,
-    bucket_sql: str | None,
-) -> str:
-    """The keyed-partial-rewrite merge path (see merge_upsert docstring).
-
-    Same last-wins/idempotency/OCC semantics as the full path — the ONLY
-    difference is which bytes move: stored rows in untouched buckets are
-    never scanned and never rewritten (their parquet files are hard-linked
-    into the new version)."""
-    from pyspark.sql import functions as F
-
-    bucket_sql = bucket_sql or table.default_bucket_sql(keys, n_buckets)
-    deduped = dedupe_last_wins(batch, keys, order_col)
-    base = table.current_version()
-    if base is None:
-        return table.overwrite_bucketed(
-            deduped, list(keys), n_buckets, bucket_sql, expected_base=None
-        )
-    sidecars = table.sidecar_listing(base)
-    spec = table.bucket_spec(base)
-    if evolve_schema or sidecars or spec != (list(keys), n_buckets, bucket_sql):
-        # one full rewrite: folds pending deletes / applies evolution via
-        # the plain path's read(), then (re-)buckets so the NEXT merge is
-        # partial. Build the merged relation exactly like merge_upsert.
-        deduped_p = deduped.localCheckpoint(eager=False)
-        stored = table.read(version=base)
-        kept = stored.join(deduped_p.select(*keys), list(keys), "left_anti")
-        merged = kept.unionByName(deduped_p, allowMissingColumns=evolve_schema)
-        return table.overwrite_bucketed(
-            merged,
-            list(keys),
-            n_buckets,
-            bucket_sql,
-            expected_base=base,
-            expected_sidecars=sidecars,
-        )
-    # pin: feeds the touched-bucket collect, the anti-join, and the union
-    deduped = deduped.localCheckpoint(eager=False)
-    # bounded collect: at most n_buckets ids (micro-batches touch far fewer)
-    touched = sorted(
-        r["__b"]
-        for r in deduped.select(F.expr(bucket_sql).alias("__b"))
-        .distinct()
-        .collect()
-    )
-    stored_touched = table.read_buckets(base, touched)
-    kept = stored_touched.join(deduped.select(*keys), list(keys), "left_anti")
-    merged = kept.unionByName(deduped)
-    return table.replace_buckets(
-        merged,
-        touched,
-        list(keys),
-        n_buckets,
-        expected_base=base,
-        bucket_sql=bucket_sql,
-        expected_sidecars=sidecars,
     )

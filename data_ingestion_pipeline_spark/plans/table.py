@@ -41,9 +41,10 @@ __all__ = ["ManagedTable", "ConcurrentWriteError"]
 
 _POINTER = "_LATEST"
 _PTR_LOCK = ".ptr_lock"
-# key-bucketed layout (keyed partial rewrites): versions committed through
-# overwrite_bucketed/replace_buckets store data under __bucket=K partition
-# dirs with a hidden spec file pinning (key columns, bucket count)
+# key-bucketed layout (keyed partial rewrites): versions laid out by
+# overwrite_bucketed, and every commit derived from one, store data under
+# __bucket=K partition dirs with a hidden spec file pinning (key columns,
+# bucket count, bucket expression)
 _BUCKET_COL = "__bucket"
 _BUCKET_SPEC = "_bucket_spec"  # leading _ -> invisible to the data scan
 # sentinel: "caller did not declare a base" (None is a real value — the
@@ -262,9 +263,12 @@ class ManagedTable:
             # key-bucketed layout: the bucket is derivable from the keys
             # (bucket_expr), so it is storage layout, not table schema
             df = df.drop(_BUCKET_COL)
-        if not apply_deletes:
-            return df
-        sidecars = self._delete_sidecars(v)
+        return self._fold_deletes(df, v) if apply_deletes else df
+
+    def _fold_deletes(self, df: DataFrame, version: str) -> DataFrame:
+        """Apply ``version``'s equality-delete sidecars to ``df`` (a scan of
+        that version) as an anti-join; a no-op when none are pending."""
+        sidecars = self._delete_sidecars(version)
         if not sidecars:
             return df
         from functools import reduce
@@ -426,9 +430,34 @@ class ManagedTable:
         a concurrent writer's changes — every read-modify-write path in
         this module (merge, delete_where, rewrite_deletes, compact)
         declares its base; blind full replacements may omit it and get
-        last-commit-wins."""
+        last-commit-wins.
+
+        A commit that declares an existing base is derived from it and
+        keeps its layout: a key-bucketed base (``overwrite_bucketed``)
+        yields a key-bucketed version under the same spec, so the next
+        merge stays a keyed partial rewrite. A blind replacement or a
+        bootstrap has no base to follow and writes plain parquet."""
+        spec = None
+        if expected_base is not _UNSET and expected_base is not None:
+            spec = self.bucket_spec(expected_base)
+        return self._commit(df, spec, expected_base, expected_sidecars)
+
+    def _commit(
+        self,
+        df: DataFrame,
+        spec,
+        expected_base,
+        expected_sidecars,
+        touched: Sequence[int] | None = None,
+    ) -> str:
+        """The one sequence every version is born through: stage → claim →
+        commit → vacuum. ``spec`` None stages plain parquet; a bucket spec
+        stages the key-bucketed layout (``_stage_bucketed``)."""
         stage = os.path.join(self.root, f"._stage_{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(stage)
+        if spec is None:
+            df.write.mode("overwrite").parquet(stage)
+        else:
+            self._stage_bucketed(df, stage, spec, expected_base, touched)
         version = self._claim_version(stage)
         self._commit_pointer(version, expected_base, expected_sidecars)
         self._vacuum()
@@ -450,6 +479,10 @@ class ManagedTable:
     # the hard link becomes a manifest entry (Delta/Iceberg keep exactly
     # this metadata instead of links); the commit protocol is unchanged —
     # staged dir, atomic slot claim, pointer swap under the flock.
+    #
+    # The layout is table state, not a per-call option: overwrite_bucketed
+    # declares it (CREATE TABLE … CLUSTERED BY), every derived commit keeps
+    # it, and merge_upsert reads it to pick the partial path.
 
     @staticmethod
     def default_bucket_sql(key_cols: Sequence[str], n_buckets: int) -> str:
@@ -470,19 +503,11 @@ class ManagedTable:
             f"cast(pmod(xxhash64({', '.join(key_cols)}), {n_buckets}) as int)"
         )
 
-    def _write_bucket_spec(
-        self, stage: str, key_cols: Sequence[str], n_buckets: int, bucket_sql: str
-    ) -> None:
-        with open(os.path.join(stage, _BUCKET_SPEC), "w") as f:
-            f.write(
-                ",".join(key_cols) + "\n" + str(n_buckets) + "\n" + bucket_sql + "\n"
-            )
-
     def bucket_spec(self, version: str | None = None):
-        """(key_cols, n_buckets, bucket_sql) if ``version`` was committed
-        key-bucketed, else None. A full-rewrite path that loses the layout
-        (compact, delete_where, plain overwrite) simply yields None here
-        and the next keyed merge re-buckets with one full rewrite."""
+        """(key_cols, n_buckets, bucket_sql) if ``version`` is key-bucketed,
+        else None. Set by ``overwrite_bucketed`` and carried by every
+        derived commit (merge, compact, delete_where, rewrite_deletes,
+        schema sync); only a blind ``overwrite`` drops it."""
         v = version or self.current_version()
         if v is None:
             return None
@@ -502,25 +527,76 @@ class ManagedTable:
         expected_base=_UNSET,
         expected_sidecars=None,
     ) -> str:
-        """Full rewrite committed in the key-bucketed layout (the bootstrap
-        / re-bucketing path of keyed partial rewrites). One shuffle on the
-        bucket id so each bucket dir gets one file per holding task."""
+        """Commit ``df`` in the key-bucketed layout — the one call that sets
+        or changes a table's layout, like ``CREATE TABLE … CLUSTERED BY``.
+        Later merges on ``key_cols`` become keyed partial rewrites. To lay
+        out a new table before its first batch, commit an empty frame
+        (``df.limit(0)``); the version stays readable and mergeable."""
+        spec = (
+            list(key_cols),
+            n_buckets,
+            bucket_sql or self.default_bucket_sql(key_cols, n_buckets),
+        )
+        return self._commit(df, spec, expected_base, expected_sidecars)
+
+    def _stage_bucketed(
+        self,
+        df: DataFrame,
+        stage: str,
+        spec,
+        base,
+        touched: Sequence[int] | None,
+    ) -> None:
+        """Stage ``df`` under __bucket=K dirs plus the spec file. A full
+        write shuffles on the bucket id so each bucket dir gets one file
+        per holding task. ``touched`` (a partial rewrite) names the only
+        buckets ``df`` holds; every other bucket of ``base`` is hard-linked
+        in file-by-file instead."""
         from pyspark.sql import functions as F
 
-        bucket_sql = bucket_sql or self.default_bucket_sql(key_cols, n_buckets)
-        stage = os.path.join(self.root, f"._stage_{uuid.uuid4().hex}")
+        key_cols, n_buckets, bucket_sql = spec
+        if touched is None:
+            # repartition on the expression, directly over the input, so it
+            # also replaces a coalesce the caller applied (compact)
+            df = df.repartition(F.expr(bucket_sql))
         (
             df.withColumn(_BUCKET_COL, F.expr(bucket_sql))
-            .repartition(_BUCKET_COL)
             .write.mode("overwrite")
             .partitionBy(_BUCKET_COL)
             .parquet(stage)
         )
-        self._write_bucket_spec(stage, key_cols, n_buckets, bucket_sql)
-        version = self._claim_version(stage)
-        self._commit_pointer(version, expected_base, expected_sidecars)
-        self._vacuum()
-        return version
+        if touched is not None:
+            base_dir = os.path.join(self.root, base)
+            touched_set = {int(b) for b in touched}
+            try:
+                for entry in os.listdir(base_dir):
+                    if not entry.startswith(f"{_BUCKET_COL}="):
+                        continue
+                    if int(entry.split("=", 1)[1]) in touched_set:
+                        continue
+                    src = os.path.join(base_dir, entry)
+                    dst = os.path.join(stage, entry)
+                    os.makedirs(dst, exist_ok=True)
+                    for fname in os.listdir(src):
+                        if fname.endswith(".parquet"):
+                            os.link(
+                                os.path.join(src, fname),
+                                os.path.join(dst, fname),
+                            )
+            except FileNotFoundError as e:
+                # base vacuumed mid-link -> the table advanced under us;
+                # same outcome _commit_pointer would reach, surfaced earlier
+                shutil.rmtree(stage, ignore_errors=True)
+                raise ConcurrentWriteError(
+                    f"table {self.root} base {base!r} vacuumed while "
+                    f"linking untouched buckets; re-read and retry"
+                ) from e
+        if not any(e.startswith(f"{_BUCKET_COL}=") for e in os.listdir(stage)):
+            # zero rows leave a partitioned write with no data file, and a
+            # version without one has no schema to read: keep one empty file
+            df.limit(0).write.parquet(os.path.join(stage, f"{_BUCKET_COL}=0"))
+        with open(os.path.join(stage, _BUCKET_SPEC), "w") as f:
+            f.write(f"{','.join(key_cols)}\n{n_buckets}\n{bucket_sql}\n")
 
     def read_buckets(
         self, version: str, buckets: Sequence[int], apply_deletes: bool = True
@@ -531,82 +607,39 @@ class ManagedTable:
         data, not the table)."""
         from pyspark.sql import functions as F
 
-        path = os.path.join(self.root, version)
         df = (
-            self.spark.read.parquet(path)
+            self.spark.read.parquet(os.path.join(self.root, version))
             .filter(F.col(_BUCKET_COL).isin([int(b) for b in buckets]))
             .drop(_BUCKET_COL)
         )
-        if not apply_deletes:
-            return df
-        sidecars = self._delete_sidecars(version)
-        if not sidecars:
-            return df
-        from functools import reduce
-
-        keys = reduce(
-            DataFrame.unionByName,
-            [self.spark.read.parquet(p) for p in sidecars],
-        ).distinct()
-        return df.join(F.broadcast(keys), list(keys.columns), "left_anti")
+        return self._fold_deletes(df, version) if apply_deletes else df
 
     def replace_buckets(
         self,
         merged: DataFrame,
         touched: Sequence[int],
-        key_cols: Sequence[str],
-        n_buckets: int,
         expected_base: str,
-        bucket_sql: str | None = None,
         expected_sidecars=None,
     ) -> str:
         """Keyed PARTIAL rewrite: commit a new version in which only the
         ``touched`` buckets' data comes from ``merged``; every untouched
         bucket directory is hard-linked file-by-file from the base
-        snapshot. Versions stay immutable (data files are write-once, so
-        shared inodes are never mutated; _vacuum of the base keeps linked
-        files alive via the refcount). The caller must have verified
-        ``bucket_spec(expected_base) == (key_cols, n_buckets, bucket_sql)``
-        and that ``merged`` contains no rows outside ``touched``."""
-        from pyspark.sql import functions as F
-
-        bucket_sql = bucket_sql or self.default_bucket_sql(key_cols, n_buckets)
-        stage = os.path.join(self.root, f"._stage_{uuid.uuid4().hex}")
-        (
-            merged.withColumn(_BUCKET_COL, F.expr(bucket_sql))
-            .write.mode("overwrite")
-            .partitionBy(_BUCKET_COL)
-            .parquet(stage)
-        )
-        base_dir = os.path.join(self.root, expected_base)
-        touched_set = {int(b) for b in touched}
-        try:
-            for entry in os.listdir(base_dir):
-                if not entry.startswith(f"{_BUCKET_COL}="):
-                    continue
-                if int(entry.split("=", 1)[1]) in touched_set:
-                    continue
-                src = os.path.join(base_dir, entry)
-                dst = os.path.join(stage, entry)
-                os.makedirs(dst, exist_ok=True)
-                for fname in os.listdir(src):
-                    if fname.endswith(".parquet"):
-                        os.link(
-                            os.path.join(src, fname), os.path.join(dst, fname)
-                        )
-        except FileNotFoundError as e:
-            # base vacuumed mid-link -> the table advanced under us; same
-            # outcome _commit_pointer would reach, surfaced earlier
-            shutil.rmtree(stage, ignore_errors=True)
+        snapshot, under the base's spec. Versions stay immutable (data
+        files are write-once, so shared inodes are never mutated; _vacuum
+        of the base keeps linked files alive via the refcount). The caller
+        must have checked that ``expected_base`` is key-bucketed on its
+        merge keys and that ``merged`` contains no rows outside
+        ``touched``."""
+        spec = self.bucket_spec(expected_base)
+        if spec is None:
             raise ConcurrentWriteError(
-                f"table {self.root} base {expected_base!r} vacuumed while "
-                f"linking untouched buckets; re-read and retry"
-            ) from e
-        self._write_bucket_spec(stage, key_cols, n_buckets, bucket_sql)
-        version = self._claim_version(stage)
-        self._commit_pointer(version, expected_base, expected_sidecars)
-        self._vacuum()
-        return version
+                f"table {self.root} base {expected_base!r} is not a retained "
+                f"key-bucketed version (vacuumed by a concurrent commit?); "
+                f"re-read and retry"
+            )
+        return self._commit(
+            merged, spec, expected_base, expected_sidecars, touched
+        )
 
     def delete_where(self, condition) -> str:
         """Delete matching rows (GDPR/right-to-erasure): commit a new
@@ -657,28 +690,14 @@ class ManagedTable:
         version, ``coalesce`` (no shuffle) bin-packs partitions down to
         ``ceil(bytes / target)`` files. Data is unchanged — only layout.
 
-        A KEY-BUCKETED version (keyed partial rewrites) keeps its layout:
-        the compaction re-commits through ``overwrite_bucketed`` under the
-        same spec, so small files accreted by per-batch partial rewrites
-        bin-pack per bucket WITHOUT demoting the next merge to a full
-        re-bucketing rewrite. (Folding pending delete sidecars stays
-        correct either way — the read applies them before the rewrite.)
+        Like every derived commit, compaction keeps a key-bucketed layout
+        (see ``overwrite``): the small files accreted by per-batch partial
+        rewrites pack to one per bucket and the next merge stays partial.
         """
         cur = self.current_version()
         if cur is None:
             raise FileNotFoundError(f"table {self.root} has no committed version")
         sidecars = self._delete_sidecars(cur)
-        spec = self.bucket_spec(cur)
-        if spec is not None:
-            key_cols, n_buckets, bucket_sql = spec
-            return self.overwrite_bucketed(
-                self.read(version=cur),
-                key_cols,
-                n_buckets,
-                bucket_sql,
-                expected_base=cur,
-                expected_sidecars=sidecars,
-            )
         n_files = max(1, -(-self._data_bytes(cur) // target_file_bytes))
         return self.overwrite(
             self.read(version=cur).coalesce(n_files),

@@ -28,6 +28,14 @@ def _default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
+def _default_driver_memory() -> str:
+    """Half of physical RAM, capped at 16g: local[N] runs the whole engine
+    in one JVM, and a heap sized past physical memory gets the process
+    OOM-killed on a swap-less host instead of spilling."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, ram_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "data_ingestion_pipeline_spark",
     master: str | None = None,
@@ -55,7 +63,8 @@ def get_spark(
         # is sized for a thin cluster driver, not for N executor threads.
         # Ignored (harmlessly) once a JVM is already up.
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
         )
         .config("spark.sql.session.timeZone", "UTC")
         # Managed-table warehouse (bucketed tables, saveAsTable) — under

@@ -2,8 +2,9 @@
 
 The reference reads CSV with pandas and post-hoc coercion
 (``flows/data_ingestion.py:68-96``); here the reader is ``spark.read.csv``
-with an explicit schema — no inference pass (inference = an extra full scan
-at 100 TB), malformed rows quarantined instead of failing the job.
+(``spark.readStream.csv`` for the streaming sink) with an explicit schema
+— no inference pass (inference = an extra full scan at 100 TB),
+malformed rows quarantined instead of failing the job.
 
 ``mode="DROPMALFORMED"`` drops unparseable lines at the reader: the
 PERMISSIVE + corrupt-column form either leaks malformed lines as all-NULL
@@ -16,8 +17,9 @@ this ingest path's job.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamReader
 
 from data_ingestion_pipeline_spark import schemas
 from data_ingestion_pipeline_spark.functions.normalize import (
@@ -25,7 +27,7 @@ from data_ingestion_pipeline_spark.functions.normalize import (
     normalize_orders,
 )
 
-__all__ = ["read_orders_csv", "read_inventory_csv"]
+__all__ = ["read_csv", "read_orders_csv", "read_inventory_csv"]
 
 _CSV_OPTIONS = {
     "header": "true",
@@ -37,8 +39,13 @@ _CSV_OPTIONS = {
 }
 
 
-def _read(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    df = spark.read.options(**_CSV_OPTIONS).schema(schema).csv(path)
+def read_csv(
+    reader: DataFrameReader | DataStreamReader, path: str, schema: T.StructType
+) -> DataFrame:
+    """Schema'd DROPMALFORMED CSV scan through ``spark.read`` or
+    ``spark.readStream``: the batch and streaming ingest paths drop the
+    same malformed lines."""
+    df = reader.options(**_CSV_OPTIONS).schema(schema).csv(path)
     # DROPMALFORMED is projection-dependent under CSV column pruning: a
     # malformed row is dropped only when a parsed column exposes it, so
     # df.count() KEPT such rows and a narrow projection LEAKED them as
@@ -57,11 +64,11 @@ def _read(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
 
 def read_orders_csv(spark: SparkSession, path: str, normalized: bool = True) -> DataFrame:
     """S1 — orders CSV scan (reference ``flows/data_ingestion.py:80-96``)."""
-    raw = _read(spark, path, schemas.ORDERS_CSV_RAW)
+    raw = read_csv(spark.read, path, schemas.ORDERS_CSV_RAW)
     return normalize_orders(raw) if normalized else raw
 
 
 def read_inventory_csv(spark: SparkSession, path: str, normalized: bool = True) -> DataFrame:
     """S2 — inventory CSV scan (reference ``flows/data_ingestion.py:68-77``)."""
-    raw = _read(spark, path, schemas.INVENTORY_CSV_RAW)
+    raw = read_csv(spark.read, path, schemas.INVENTORY_CSV_RAW)
     return normalize_inventory(raw) if normalized else raw

@@ -20,6 +20,7 @@ from data_ingestion_pipeline_spark import schemas
 from data_ingestion_pipeline_spark.functions.normalize import normalize_orders
 from data_ingestion_pipeline_spark.plans.merge import merge_upsert
 from data_ingestion_pipeline_spark.plans.table import ManagedTable
+from data_ingestion_pipeline_spark.sources.csv_reader import read_csv
 
 __all__ = [
     "stream_orders_csv",
@@ -35,45 +36,31 @@ def stream_orders_csv(
     checkpoint_dir: str,
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
-    repartition_keys: bool = False,
-    n_buckets: int = 64,
-    bucket_sql: str | None = None,
 ) -> StreamingQuery:
     """Ingest order CSVs dropped into ``input_dir``.
 
     Each micro-batch runs the same deterministic MERGE as the batch pipeline
     (dedup last-wins → anti-join → atomic version swap), so stream-then-batch
-    and batch-then-stream converge to the same table state.
+    and batch-then-stream converge to the same table state. The reader is
+    the batch one too (``sources.csv_reader.read_csv``), so a malformed
+    line is dropped on either path. The sink follows the table's layout
+    like any merge: declare it once with ``ManagedTable.overwrite_bucketed``
+    (an empty frame is enough before the first file) and every micro-batch
+    becomes a keyed partial rewrite with flat per-batch latency.
 
     ``available_now=True`` (the test/driver default) drains the files
     present at start and stops; pass ``available_now=False`` for the
     continuous deployment that keeps watching the directory.
-
-    ``repartition_keys=True`` switches the sink to keyed PARTIAL rewrites
-    (plans/merge.py): the table lays out in ``n_buckets`` key partitions
-    and each micro-batch rewrites only the buckets it touches — the lever
-    that keeps per-batch latency flat as the table grows (pass a
-    locality-matched ``bucket_sql``; see ManagedTable.default_bucket_sql).
     """
-    reader = (
-        spark.readStream.schema(schemas.ORDERS_CSV_RAW)
-        .option("header", "true")
-        .option("nullValue", "")
-    )
+    reader = spark.readStream
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.csv(input_dir)
+    raw = read_csv(reader, input_dir, schemas.ORDERS_CSV_RAW)
     normalized = normalize_orders(raw)
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         merge_upsert(
-            table,
-            batch_df,
-            keys=schemas.ORDERS_KEY,
-            order_col="date_time",
-            repartition_keys=repartition_keys,
-            n_buckets=n_buckets,
-            bucket_sql=bucket_sql,
+            table, batch_df, keys=schemas.ORDERS_KEY, order_col="date_time"
         )
 
     writer = normalized.writeStream.foreachBatch(apply_batch).option(
@@ -109,8 +96,10 @@ def merge_additive_aggregates(
     partitioning cannot change the result).
 
     At scale the union+groupBy shuffles current-summary + batch partials on
-    the key — bound it by partitioning the summary on the key so only
-    touched partitions rewrite (same lever as plans/merge.py).
+    the key, and the fold rewrites the whole summary (in its declared
+    layout, if any). plans/merge.py bounds the same cost with a keyed
+    partial rewrite on a key-bucketed table; this fold does not use it
+    yet.
     """
     from pyspark.sql import functions as F
 

@@ -199,32 +199,58 @@ def _mk_batch(spark, pairs):
     )
 
 
+def _inodes(root, version):
+    """{bucket dir: {parquet file: inode}} of one version."""
+    vdir = os.path.join(root, version)
+    return {
+        entry: {
+            f: os.stat(os.path.join(vdir, entry, f)).st_ino
+            for f in os.listdir(os.path.join(vdir, entry))
+            if f.endswith(".parquet")
+        }
+        for entry in os.listdir(vdir)
+        if entry.startswith("__bucket=")
+    }
+
+
+def _linked_buckets(root, v1, v2):
+    """Bucket dirs of v1 whose files v2 shares by inode (hard-linked)."""
+    old, new = _inodes(root, v1), _inodes(root, v2)
+    return {b for b, files in old.items() if files and files == new.get(b)}
+
+
 def test_partial_merge_matches_full_merge(spark, tmp_path):
     """The keyed-partial path must be semantically invisible: same final
-    contents as the full-rewrite path on identical inputs."""
+    contents as the full-rewrite path on identical inputs. The same plain
+    merge_upsert call runs on both tables; only the declared layout
+    differs."""
     full = ManagedTable(spark, str(tmp_path / "full"))
     part = ManagedTable(spark, str(tmp_path / "part"))
     b0 = _mk_batch(spark, [("a", 1, 1), ("b", 2, 1), ("c", 3, 1), ("d", 4, 1)])
     b1 = _mk_batch(spark, [("b", 20, 2), ("e", 50, 2), ("b", 21, 3)])
-    for t, kw in ((full, {}), (part, {"repartition_keys": True, "n_buckets": 8})):
-        merge_upsert(t, b0, ["k"], "ts", **kw)
-        merge_upsert(t, b1, ["k"], "ts", **kw)
+    part.overwrite_bucketed(b0.limit(0), ["k"], 8)
+    for t in (full, part):
+        merge_upsert(t, b0, ["k"], "ts")
+        merge_upsert(t, b1, ["k"], "ts")
     want = sorted((r.k, r.v) for r in full.read().collect())
     got = sorted((r.k, r.v) for r in part.read().collect())
     assert got == want == [("a", 1), ("b", 21), ("c", 3), ("d", 4), ("e", 50)]
+    assert full.bucket_spec() is None
+    assert part.bucket_spec() == (["k"], 8, part.default_bucket_sql(["k"], 8))
     # layout is internal: the read schema carries no bucket column
     assert "__bucket" not in part.read().columns
 
 
 def test_partial_merge_hardlinks_untouched_buckets(spark, tmp_path):
-    """Untouched bucket dirs must be hard links of the base version's files
-    (same inode — no data copied, no rewrite), and the stored scan must
-    partition-prune to the touched buckets only."""
+    """A plain merge on a table declared with overwrite_bucketed takes the
+    partial path: untouched bucket dirs are hard links of the base
+    version's files (same inode — no data copied, no rewrite), and the
+    stored scan partition-prunes to the touched buckets only."""
     t = ManagedTable(spark, str(tmp_path / "t"))
     big = spark.range(400).selectExpr(
         "CAST(id AS STRING) AS k", "id AS v", "timestamp('2023-01-01') AS ts"
     )
-    merge_upsert(t, big, ["k"], "ts", repartition_keys=True, n_buckets=16)
+    t.overwrite_bucketed(big, ["k"], 16)
     v1 = t.current_version()
     batch = _mk_batch(spark, [("7", 700, 2)])
     touched = F.expr(t.default_bucket_sql(["k"], 16))
@@ -239,55 +265,42 @@ def test_partial_merge_hardlinks_untouched_buckets(spark, tmp_path):
     assert "PartitionFilters" in scan_line and "__bucket" in scan_line.split(
         "PartitionFilters"
     )[1].split("]")[0]
-    merge_upsert(t, batch, ["k"], "ts", repartition_keys=True, n_buckets=16)
+    merge_upsert(t, batch, ["k"], "ts")
     v2 = t.current_version()
     assert v2 != v1
-    import os as _os
-
-    def inodes(version, bucket_dir):
-        d = _os.path.join(str(tmp_path / "t"), version, bucket_dir)
-        return {
-            f: _os.stat(_os.path.join(d, f)).st_ino
-            for f in _os.listdir(d)
-            if f.endswith(".parquet")
-        }
-
-    linked = rewritten = 0
-    for entry in _os.listdir(_os.path.join(str(tmp_path / "t"), v1)):
-        if not entry.startswith("__bucket="):
-            continue
-        b = int(entry.split("=")[1])
-        if b == tb["b"]:
-            # touched bucket: rewritten, so no shared inodes
-            old, new = inodes(v1, entry), inodes(v2, entry)
-            assert not (set(old.values()) & set(new.values()))
-            rewritten += 1
-        else:
-            assert inodes(v1, entry) == inodes(v2, entry), entry
-            linked += 1
-    assert rewritten == 1 and linked >= 10
+    root = str(tmp_path / "t")
+    old, new = _inodes(root, v1), _inodes(root, v2)
+    touched_dir = f"__bucket={tb['b']}"
+    # touched bucket: rewritten, so no shared inodes
+    assert not (set(old[touched_dir].values()) & set(new[touched_dir].values()))
+    linked = _linked_buckets(root, v1, v2)
+    assert linked == set(old) - {touched_dir} and len(linked) >= 10
     # contents correct after the partial commit
     rows = {r.k: r.v for r in t.read().collect()}
     assert rows["7"] == 700 and len(rows) == 400
 
 
-def test_partial_merge_rebuckets_unbucketed_table(spark, tmp_path):
-    """First repartition_keys merge against a plain table does ONE full
-    re-bucketing rewrite; the next merge goes partial."""
-    t = ManagedTable(spark, str(tmp_path / "t"))
-    merge_upsert(t, _mk_batch(spark, [("a", 1, 1), ("b", 2, 1)]), ["k"], "ts")
-    assert t.bucket_spec() is None
-    merge_upsert(
-        t,
-        _mk_batch(spark, [("a", 10, 2)]),
-        ["k"],
-        "ts",
-        repartition_keys=True,
-        n_buckets=4,
+def _ids(spark, n):
+    return spark.range(n).selectExpr(
+        "CAST(id AS STRING) AS k", "id AS v", "timestamp('2023-01-01') AS ts"
     )
+
+
+def test_partial_merge_rebuckets_unbucketed_table(spark, tmp_path):
+    """overwrite_bucketed(t.read(), ...) re-lays out a plain table in one
+    full rewrite; the next plain merge then goes partial."""
+    t = ManagedTable(spark, str(tmp_path / "t"))
+    merge_upsert(t, _ids(spark, 40), ["k"], "ts")
+    assert t.bucket_spec() is None
+    t.overwrite_bucketed(t.read(), ["k"], 4)
+    assert t.bucket_spec() == (["k"], 4, t.default_bucket_sql(["k"], 4))
+    v1 = t.current_version()
+    merge_upsert(t, _mk_batch(spark, [("3", 30, 2)]), ["k"], "ts")
     assert t.bucket_spec() == (["k"], 4, t.default_bucket_sql(["k"], 4))
     rows = {r.k: r.v for r in t.read().collect()}
-    assert rows == {"a": 10, "b": 2}
+    assert rows["3"] == 30 and rows["4"] == 4 and len(rows) == 40
+    # only the bucket holding "3" was rewritten; the other 3 are linked
+    assert len(_linked_buckets(str(tmp_path / "t"), v1, t.current_version())) == 3
 
 
 def test_partial_merge_folds_pending_sidecars_via_full_path(spark, tmp_path):
@@ -295,24 +308,15 @@ def test_partial_merge_folds_pending_sidecars_via_full_path(spark, tmp_path):
     global key predicates; hard-linking buckets would fork the fold), and
     the committed version carries no sidecars."""
     t = ManagedTable(spark, str(tmp_path / "t"))
-    merge_upsert(
-        t,
-        _mk_batch(spark, [("a", 1, 1), ("b", 2, 1), ("c", 3, 1)]),
-        ["k"],
-        "ts",
-        repartition_keys=True,
-        n_buckets=4,
+    t.overwrite_bucketed(
+        _mk_batch(spark, [("a", 1, 1), ("b", 2, 1), ("c", 3, 1)]), ["k"], 4
     )
     t.equality_delete(spark.createDataFrame([("b",)], "k string"), ["k"])
-    merge_upsert(
-        t,
-        _mk_batch(spark, [("d", 4, 2)]),
-        ["k"],
-        "ts",
-        repartition_keys=True,
-        n_buckets=4,
-    )
+    v1 = t.current_version()
+    merge_upsert(t, _mk_batch(spark, [("d", 4, 2)]), ["k"], "ts")
     assert t._delete_sidecars(t.current_version()) == []
+    # full rewrite: no bucket dir shares files with the base
+    assert not _linked_buckets(str(tmp_path / "t"), v1, t.current_version())
     rows = {r.k: r.v for r in t.read().collect()}
     assert rows == {"a": 1, "c": 3, "d": 4}
     # and the layout survived the fold, so the NEXT merge is partial again
@@ -320,11 +324,21 @@ def test_partial_merge_folds_pending_sidecars_via_full_path(spark, tmp_path):
 
 
 def test_partial_merge_idempotent(spark, tmp_path):
+    """Merging the same batch twice equals merging it once; an empty batch
+    (and an empty layout declaration) commits a readable, mergeable
+    version."""
     t = ManagedTable(spark, str(tmp_path / "t"))
     b = _mk_batch(spark, [("a", 1, 1), ("b", 2, 1)])
-    merge_upsert(t, b, ["k"], "ts", repartition_keys=True, n_buckets=4)
+    t.overwrite_bucketed(b.limit(0), ["k"], 4)
+    assert t.read().count() == 0
+    merge_upsert(t, b.limit(0), ["k"], "ts")
+    assert t.read().count() == 0 and t.bucket_spec() is not None
+    merge_upsert(t, b, ["k"], "ts")
     once = sorted((r.k, r.v) for r in t.read().collect())
-    merge_upsert(t, b, ["k"], "ts", repartition_keys=True, n_buckets=4)
+    assert once == [("a", 1), ("b", 2)]
+    merge_upsert(t, b, ["k"], "ts")
+    assert sorted((r.k, r.v) for r in t.read().collect()) == once
+    merge_upsert(t, b.limit(0), ["k"], "ts")
     assert sorted((r.k, r.v) for r in t.read().collect()) == once
 
 
@@ -338,77 +352,78 @@ def test_partial_merge_custom_locality_bucketing(spark, tmp_path):
     base = spark.range(800).selectExpr(
         "CAST(id AS STRING) AS k", "id AS v", "timestamp('2023-01-01') AS ts"
     )
-    merge_upsert(
-        t, base, ["k"], "ts",
-        repartition_keys=True, n_buckets=8, bucket_sql=bucket_sql,
-    )
+    t.overwrite_bucketed(base, ["k"], 8, bucket_sql)
     assert t.bucket_spec() == (["k"], 8, bucket_sql)
     # key-local batch: ids 100-149 -> all in bucket pmod(1, 8) = 1
     local = spark.range(100, 150).selectExpr(
         "CAST(id AS STRING) AS k", "id + 9000 AS v", "timestamp('2023-01-02') AS ts"
     )
     v1 = t.current_version()
-    merge_upsert(
-        t, local, ["k"], "ts",
-        repartition_keys=True, n_buckets=8, bucket_sql=bucket_sql,
-    )
-    v2 = t.current_version()
-    import os as _os
-
-    root = str(tmp_path / "t")
-    relinked = 0
-    for entry in _os.listdir(_os.path.join(root, v1)):
-        if not entry.startswith("__bucket="):
-            continue
-        same = {
-            f: _os.stat(_os.path.join(root, v1, entry, f)).st_ino
-            for f in _os.listdir(_os.path.join(root, v1, entry))
-            if f.endswith(".parquet")
-        } == {
-            f: _os.stat(_os.path.join(root, v2, entry, f)).st_ino
-            for f in _os.listdir(_os.path.join(root, v2, entry))
-            if f.endswith(".parquet")
-        }
-        relinked += same
+    merge_upsert(t, local, ["k"], "ts")
     # 7 of 8 buckets hard-linked; only bucket 1 rewritten
-    assert relinked == 7
+    linked = _linked_buckets(str(tmp_path / "t"), v1, t.current_version())
+    assert len(linked) == 7 and "__bucket=1" not in linked
     rows = {int(r.k): r.v for r in t.read().collect()}
     assert rows[120] == 9120 and rows[50] == 50 and len(rows) == 800
 
 
-def test_compact_preserves_bucketed_layout(spark, tmp_path):
-    """Compaction of a key-bucketed table must keep the layout (and its
-    spec) so the NEXT merge stays partial, and must not change contents."""
+def test_merge_on_other_keys_rewrites_in_declared_layout(spark, tmp_path):
+    """A merge whose keys differ from the layout's does one full rewrite,
+    and the rewrite keeps the declared layout."""
     t = ManagedTable(spark, str(tmp_path / "t"))
-    kw = dict(keys=["k"], order_col="ts", repartition_keys=True, n_buckets=4)
-    merge_upsert(t, _mk_batch(spark, [("a", 1, 1), ("b", 2, 1)]), **kw)
-    merge_upsert(t, _mk_batch(spark, [("c", 3, 2)]), **kw)
-    before = sorted((r.k, r.v) for r in t.read().collect())
+    t.overwrite_bucketed(_mk_batch(spark, [("a", 1, 1), ("b", 2, 1)]), ["k"], 4)
     spec = t.bucket_spec()
-    t.compact()
-    assert t.bucket_spec() == spec
-    assert sorted((r.k, r.v) for r in t.read().collect()) == before
-    # next merge is still partial: untouched bucket dirs hard-link
     v1 = t.current_version()
-    merge_upsert(t, _mk_batch(spark, [("a", 10, 3)]), **kw)
-    v2 = t.current_version()
-    import os as _os
+    merge_upsert(t, _mk_batch(spark, [("c", 2, 2)]), ["v"], "ts")
+    assert t.bucket_spec() == spec
+    assert not _linked_buckets(str(tmp_path / "t"), v1, t.current_version())
+    assert sorted((r.k, r.v) for r in t.read().collect()) == [("a", 1), ("c", 2)]
 
+
+def test_compact_preserves_bucketed_layout(spark, tmp_path):
+    """Every commit derived from a key-bucketed base (compact, delete_where,
+    rewrite_deletes, sync_table_schema) keeps the layout and its spec, so
+    the NEXT merge stays partial, and none changes contents beyond its
+    own edit."""
+    t = ManagedTable(spark, str(tmp_path / "t"))
     root = str(tmp_path / "t")
-    shared = 0
-    for entry in _os.listdir(_os.path.join(root, v1)):
-        if not entry.startswith("__bucket="):
-            continue
-        ino1 = {
-            _os.stat(_os.path.join(root, v1, entry, f)).st_ino
-            for f in _os.listdir(_os.path.join(root, v1, entry))
-            if f.endswith(".parquet")
-        }
-        if _os.path.isdir(_os.path.join(root, v2, entry)):
-            ino2 = {
-                _os.stat(_os.path.join(root, v2, entry, f)).st_ino
-                for f in _os.listdir(_os.path.join(root, v2, entry))
-                if f.endswith(".parquet")
-            }
-            shared += bool(ino1 & ino2)
-    assert shared >= 1, "post-compaction merge degraded to a full rewrite"
+    t.overwrite_bucketed(_ids(spark, 40), ["k"], 4)
+    merge_upsert(t, _mk_batch(spark, [("c", 3, 2)]), ["k"], "ts")
+    spec = t.bucket_spec()
+    want = {str(i): i for i in range(40)} | {"c": 3}
+
+    def add_column():
+        declared = T.StructType(
+            t.read().schema.fields + [T.StructField("note", T.StringType())]
+        )
+        return sync_table_schema(t, declared, protected=["k"])
+
+    def equality_delete_then_fold():
+        t.equality_delete(spark.createDataFrame([("7",)], "k string"), ["k"])
+        want.pop("7")
+        return t.rewrite_deletes()
+
+    def delete_where():
+        want.pop("5")
+        return t.delete_where(F.col("k") == "5")
+
+    for step, derive in (
+        ("compact", t.compact),
+        ("delete_where", delete_where),
+        ("rewrite_deletes", equality_delete_then_fold),
+        ("sync_table_schema", add_column),
+    ):
+        derive()
+        assert t.bucket_spec() == spec, step
+        assert {r.k: r.v for r in t.read().collect()} == want, step
+        # next merge is still partial: untouched bucket dirs hard-link
+        v1 = t.current_version()
+        batch = _mk_batch(spark, [("1", 10, 3)])
+        if "note" in t.read().columns:
+            batch = batch.withColumn("note", F.lit(None).cast("string"))
+        merge_upsert(t, batch, ["k"], "ts")
+        want["1"] = 10
+        assert len(_linked_buckets(root, v1, t.current_version())) == 3, (
+            f"merge after {step} degraded to a full rewrite"
+        )
+    assert "note" in t.read().columns

@@ -8,7 +8,10 @@ import shutil
 
 from pyspark.sql import functions as F
 
+from data_ingestion_pipeline_spark import schemas
+from data_ingestion_pipeline_spark.plans.merge import merge_upsert
 from data_ingestion_pipeline_spark.plans.table import ManagedTable
+from data_ingestion_pipeline_spark.sources.csv_reader import read_orders_csv
 from data_ingestion_pipeline_spark.streaming.ingest import (
     run_stream_to_completion,
     stream_orders_csv,
@@ -68,6 +71,38 @@ def test_stream_ingest_foreachbatch_merge(spark, tmp_path):
     q = stream_orders_csv(spark, str(inbox), table, str(tmp_path / "ckpt"))
     run_stream_to_completion(q)
     assert table.read().count() == 3
+
+
+def test_stream_and_batch_ingest_drop_the_same_malformed_line(spark, tmp_path):
+    """Both ingest paths share one CSV reader: a malformed line (a
+    non-integer quantity) is dropped by the stream exactly as by the batch
+    read, so the two tables are identical."""
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    _write_orders_csv(
+        inbox / "batch1.csv",
+        [
+            'o1,p1,SEK,1,0,100.0,direct,direct,"",2023-02-01T10:00:00Z',
+            'o2,p2,SEK,notanint,0.0,xx,direct,direct,"",2023-02-01T11:00:00Z',
+            'o3,p3,SEK,3,0,300.0,google,sem,"c1",2023-02-01T12:00Z',
+        ],
+    )
+    streamed = ManagedTable(spark, str(tmp_path / "streamed"))
+    q = stream_orders_csv(spark, str(inbox), streamed, str(tmp_path / "ckpt"))
+    run_stream_to_completion(q)
+    (progress,) = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert progress["numInputRows"] == 2
+
+    batched = ManagedTable(spark, str(tmp_path / "batched"))
+    merge_upsert(
+        batched,
+        read_orders_csv(spark, str(inbox / "batch1.csv")),
+        keys=schemas.ORDERS_KEY,
+        order_col="date_time",
+    )
+    got = sorted(tuple(r) for r in streamed.read().collect())
+    assert got == sorted(tuple(r) for r in batched.read().collect())
+    assert [r[0] for r in got] == ["o1", "o3"]
 
 
 def _mk_events(spark, rows):

@@ -14,16 +14,18 @@ the per-batch latency series (from StreamingQuery.recentProgress). The
 latency TREND is the point: the default MERGE sink is copy-on-write over
 the whole table, so per-batch cost grows with accumulated table size —
 the series shows where state growth bends the curve. ``mode=keyed``
-switches the sink to keyed partial rewrites (plans/merge.py
-repartition_keys): the table lays out in key-range buckets, each
-micro-batch rewrites only the buckets it touches, and per-batch cost
-stays flat regardless of table size. ``pregrow`` bootstraps the table
+declares the table's layout once before any data lands
+(ManagedTable.overwrite_bucketed on an empty frame): the table lays out
+in key-range buckets, and the unchanged sink's merges follow that layout
+as keyed partial rewrites — each micro-batch rewrites only the buckets
+it touches, and per-batch cost stays flat regardless of table size. ``pregrow`` bootstraps the table
 with N x the sf orders rows (disjoint keys ABOVE the stream's key range)
 BEFORE the stream starts, so the two modes can be compared at a
 deliberately grown table.
 
 Usage: python tools/stream_bench.py [sf_dir] [n_batches] [mode] [pregrow]
-  mode:    cow (default; full copy-on-write rewrites) | keyed
+  mode:    cow (default; full copy-on-write rewrites) |
+           keyed (key-range bucketed layout declared up front; partial rewrites)
   pregrow: integer multiplier (default 0 = start empty)
 
 Batches are sliced by CONTIGUOUS orderkey ranges (ascending-id ingest, the
@@ -145,6 +147,7 @@ def main() -> None:
     from data_ingestion_pipeline_spark.plans.merge import merge_upsert
     from data_ingestion_pipeline_spark.plans.table import ManagedTable
     from data_ingestion_pipeline_spark.session import get_spark
+    from data_ingestion_pipeline_spark.sources.csv_reader import read_orders_csv
     from data_ingestion_pipeline_spark.streaming.ingest import (
         run_stream_to_completion,
         stream_orders_csv,
@@ -172,11 +175,6 @@ def main() -> None:
         f"cast(pmod(cast(substring(order_id, 2, 18) as bigint) "
         f"div {width}, {n_buckets}) as int)"
     )
-    keyed_kw = (
-        {"repartition_keys": True, "n_buckets": n_buckets, "bucket_sql": bucket_sql}
-        if mode == "keyed"
-        else {}
-    )
 
     work = tempfile.mkdtemp(prefix="stream_bench_")
     try:
@@ -187,18 +185,24 @@ def main() -> None:
         table = ManagedTable(
             spark, os.path.join(work, "orders_tbl"), keep_versions=2
         )
+        seed = None
         if pregrow:
             grow_csv = os.path.join(work, "pregrow.csv")
             gen_pregrow(sf_dir, grow_csv, pregrow)
-            seed = normalize_orders(
-                spark.read.schema(schemas.ORDERS_CSV_RAW)
-                .option("header", "true")
-                .option("nullValue", "")
-                .csv(grow_csv)
+            seed = read_orders_csv(spark, grow_csv)
+        if mode == "keyed":
+            # declare the layout once, before the stream: the sink's plain
+            # merges follow it as keyed partial rewrites
+            if seed is None:
+                seed = normalize_orders(
+                    spark.createDataFrame([], schemas.ORDERS_CSV_RAW)
+                )
+            table.overwrite_bucketed(
+                seed, schemas.ORDERS_KEY, n_buckets, bucket_sql
             )
+        elif seed is not None:
             merge_upsert(
-                table, seed, keys=schemas.ORDERS_KEY, order_col="date_time",
-                **keyed_kw,
+                table, seed, keys=schemas.ORDERS_KEY, order_col="date_time"
             )
         t0 = time.time()
         q = stream_orders_csv(
@@ -208,7 +212,6 @@ def main() -> None:
             os.path.join(work, "ckpt"),
             max_files_per_trigger=1,
             available_now=True,
-            **keyed_kw,
         )
         run_stream_to_completion(q, timeout_s=1800.0)
         wall = time.time() - t0
